@@ -10,9 +10,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * query's intermediates in the block manager — by mid-run, storage
   * memory is doing eviction/GC work that gets billed to whichever query
   * is executing. `sweep()` frees everything between queries, EXCEPT
-  * checkpoints registered through `pinned()` — those back cross-query
-  * memo caches (Stratify's strata, Dedup's pair set) whose lineage is
-  * truncated and therefore cannot be recomputed if their blocks vanish.
+  * checkpoints registered through `pinned()` or `pin()` — those back
+  * cross-query memo caches (Stratify's strata, Dedup's pair set) whose
+  * lineage is truncated and therefore cannot be recomputed if their
+  * blocks vanish.
   */
 object Ckpt {
   // Pins are scoped by applicationId: a bare rdd-id set would grow
@@ -59,7 +60,12 @@ object Ckpt {
   }
 
   /** Eager cut whose blocks survive `sweep` — use ONLY for
-    * DataFrames memoized across queries.
+    * DataFrames memoized across queries. */
+  def pinned(df: DataFrame): DataFrame = pin(cut(df))
+
+  /** Pin a frame that is ALREADY the output of `cut` — a memo build
+    * that ends in its own cut — so its blocks survive `sweep` without a
+    * second checkpoint. Returns `df` itself.
     *
     * Pins by the checkpointed DataFrame's OWN rdd id: `localCheckpoint`
     * returns a Dataset whose analyzed plan is the `LogicalRDD` wrapping
@@ -69,19 +75,18 @@ object Ckpt {
     * thread during the window.) `LogicalRDD.rdd` is `private[sql]`,
     * which erases to a public accessor in bytecode — reflection reaches
     * it without copying Spark internals. */
-  def pinned(df: DataFrame): DataFrame = {
-    val out = cut(df)
-    val plan = out.queryExecution.analyzed
+  def pin(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.analyzed
     val rdd =
       try plan.getClass.getMethod("rdd").invoke(plan)
         .asInstanceOf[org.apache.spark.rdd.RDD[_]]
       catch {
         case e: Exception => throw new IllegalStateException(
-          s"Ckpt.pinned: expected a LogicalRDD plan from localCheckpoint, " +
+          s"Ckpt.pin: expected a LogicalRDD plan from Ckpt.cut, " +
             s"got ${plan.getClass.getName}", e)
       }
     pinnedIds.add((rdd.context.applicationId, rdd.id))
-    out
+    df
   }
 
   /** Free one localCheckpoint's blocks NOW — for iterative fixpoints

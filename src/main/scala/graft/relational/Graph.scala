@@ -268,10 +268,10 @@ object Graph {
     * d'(v) = min(d(v), min over in-edges (u,v) of d(u)+1 — the
     * distributed Bellman-Ford/BFS step, one edge join + one keyed min
     * per round, the exact shape a frontier-based engine runs to a
-    * fixpoint (`rounds.Stratify`'s loop). Distances stay in integer
-    * arithmetic with 999 as the not-yet-reached sentinel, so the whole
-    * computation is oracle-restatable round by round. Output is the
-    * hop histogram with min/Σ id checksums per level. */
+    * fixpoint (`llm.Dedup.minLabelComponents`'s loop). Distances stay
+    * in integer arithmetic with 999 as the not-yet-reached sentinel, so
+    * the whole computation is oracle-restatable round by round. Output
+    * is the hop histogram with min/Σ id checksums per level. */
   def q161BfsHops(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // distinct user set == the presence table's user set (the edge

@@ -1,7 +1,8 @@
 package graft.rounds
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.Tables
 
 /** Round stratification S9 — the reference's core scheduling transform
@@ -11,72 +12,104 @@ import graft.Tables
   * dependency chain ending at it; every phase runs in the earliest
   * round its dependencies allow (maximality).
   *
-  * Implemented as an iterative DataFrame fixpoint: each iteration joins
-  * the current depth estimate across the dependency edges and takes
-  * `max(dep depth)+1`; terminates in ≤ depth(DAG) iterations. All work
-  * is distributed joins/aggregations keyed by (plan, phase) — the
-  * driver only counts iterations, so 10⁹ plans stratify exactly like
-  * 10: shuffle-partitioned by key, no driver-side data.
+  * Implemented as ONE keyed pass: node and edge rows are unioned and
+  * grouped by plan (one shuffle), and each plan's DAG is stratified by
+  * [[longestPathRounds]] (Kahn order, O(V+E)) inside a typed
+  * `flatMapGroups` — the same shape as `Lifecycle.replayBatch`, no SQL
+  * UDF. A plan's DAG lives in one task; the plan COUNT is what scales,
+  * shuffle-partitioned by key with no driver-side data. The result is
+  * materialized by a single `Ckpt.cut`, whose action also carries the
+  * depth and cycle guard as an `Observation`, so the guard costs no job
+  * and the job count does not grow with DAG depth.
   *
-  * Cycle safety: edges are restricted to earlier→later phase numbers
-  * (the reference's own tiebreak — oldest first, `agents/orbiter.md:
-  * 138-140` — applied at edge-derivation time), so the graph is acyclic
-  * by construction and the fixpoint always terminates.
+  * Cycle safety: a cycle (self-loops included) throws on the driver.
+  * q40 restricts its edges to earlier→later phase numbers (the
+  * reference's own tiebreak — oldest first, `agents/orbiter.md:
+  * 138-140` — applied at edge-derivation time), so its graph is
+  * acyclic by construction.
   */
 object Stratify {
 
   /** Stratify a generic edge list. `nodes`: (plan, phase); `edges`:
     * (plan, phase, dep) meaning `dep` must finish before `phase`.
-    * Returns (plan, phase, round) with round ≥ 1. */
+    * Returns (plan, phase, round) with round ≥ 1: one row per input
+    * node row, `plan` and `phase` keeping the caller's types. Edges
+    * with an endpoint that is not a node of their plan are ignored.
+    * A cycle, or a dependency chain deeper than `maxIter` rounds,
+    * throws `IllegalStateException` rather than returning wrong strata. */
   def stratify(nodes: DataFrame, edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    val e = edges.transform(graft.Ckpt.cut) // reused every iteration
-    // depth starts at 1 for every node
-    var depth = nodes.select($"plan", $"phase", lit(1).as("round"))
+    val plan = nodes.schema("plan")
+    val phase = nodes.schema("phase")
+    // node rows carry a null dep; an edge with a null endpoint names no
+    // node, as null never equals a key
+    val tagged = nodes.select($"plan", $"phase", lit(null).cast(phase.dataType).as("dep"))
+      .union(edges.filter($"plan".isNotNull && $"phase".isNotNull && $"dep".isNotNull)
+        .select($"plan".cast(plan.dataType), $"phase".cast(phase.dataType),
+          $"dep".cast(phase.dataType)))
+    val outSchema = StructType(Seq(plan, phase, StructField("round", IntegerType, false)))
+    val guard = Observation()
+    val out = tagged.groupBy($"plan")
+      .as[Row, Row](Encoders.row(StructType(Seq(plan))), Encoders.row(tagged.schema))
+      .flatMapGroups { (_, rows) =>
+        val (ns, es) = rows.toVector.partition(_.isNullAt(2))
+        // round 0 marks a cyclic plan for the guard below
+        val rs = longestPathRounds(ns.map(_.get(1)), es.map(r => (r.get(1), r.get(2))))
+          .getOrElse(Seq.fill(ns.size)(0))
+        ns.lazyZip(rs).map((n, r) => Row(n.get(0), n.get(1), r))
+      }(Encoders.row(outSchema))
+      .toDF()
+      .observe(guard, max($"round").as("depth"), min($"round").as("lowest"))
       .transform(graft.Ckpt.cut)
-    var changed = true
-    var i = 0
-    while (changed && i < maxIter) {
-      // proposed = 1 + max over deps' current depth
-      val proposed = e
-        .join(depth.withColumnRenamed("phase", "dep_phase")
-          .withColumnRenamed("round", "dep_round"),
-          Seq("plan"))
-        .filter($"dep" === $"dep_phase")
-        .groupBy($"plan", $"phase")
-        .agg((max($"dep_round") + 1).as("via_deps"))
-      // localCheckpoint truncates the growing lineage so per-iteration
-      // planning stays O(1) — at scale this is the standard iterative-
-      // algorithm pattern (same as GraphX/ALS checkpoint cadence)
-      val next = depth.join(proposed, Seq("plan", "phase"), "left")
-        .select($"plan", $"phase",
-          greatest($"round", coalesce($"via_deps", lit(1))).as("round"))
-        .transform(graft.Ckpt.cut)
-      val delta = next.join(depth.withColumnRenamed("round", "old"),
-        Seq("plan", "phase"))
-        .filter($"round" =!= $"old").limit(1).count()
-      changed = delta > 0
-      // free the superseded round's checkpoint blocks (see
-      // Dedup.minLabelComponents — k rounds must not hold k copies)
-      graft.Ckpt.free(depth)
-      depth = next
-      i += 1
-    }
-    graft.Ckpt.free(e)
-    // A DAG deeper than maxIter means the returned rounds are NOT a
-    // valid stratification — fail fast rather than hand the scheduler
-    // silently-wrong strata (same contract as bandBucket's dim guard:
-    // a structural assumption violation must error, not degrade).
-    if (changed)
+    val m = guard.get
+    val depth = Option(m("depth")).fold(0)(_.asInstanceOf[Int])
+    val cyclic = Option(m("lowest")).contains(0)
+    // strata deeper than maxIter rounds fail fast rather than reach the
+    // scheduler (same contract as bandBucket's dim guard: a structural
+    // violation errors, never degrades)
+    if (cyclic || depth > maxIter) {
+      graft.Ckpt.free(out)
       throw new IllegalStateException(
-        s"stratify did not converge in $maxIter rounds — dependency " +
-        "chains deeper than maxIter; raise maxIter")
-    depth
+        s"stratify did not converge in $maxIter rounds — " +
+          (if (cyclic) "the dependency graph has a cycle"
+           else s"dependency chains are $depth deep; raise maxIter"))
+    }
+    out
+  }
+
+  /** Longest-path rounds of ONE plan's DAG in Kahn order, O(V+E): the
+    * round of `phases(i)` is 1 + the max round of its deps (1 with
+    * none), returned in `phases` order, so duplicate phases repeat
+    * their round. `edges` are (phase, dep) pairs; one with an endpoint
+    * outside `phases` is ignored and duplicates are harmless. None when
+    * the edges hold a cycle. */
+  def longestPathRounds[P](phases: Seq[P], edges: Seq[(P, P)]): Option[Seq[Int]] = {
+    val id = phases.distinct.zipWithIndex.toMap
+    val n = id.size
+    val next = Array.fill(n)(List.empty[Int])
+    val pending = new Array[Int](n)
+    for ((ph, dep) <- edges; i <- id.get(ph); j <- id.get(dep)) {
+      next(j) = i :: next(j)
+      pending(i) += 1
+    }
+    val round = Array.fill(n)(1)
+    val ready = scala.collection.mutable.ArrayDeque.from((0 until n).filter(pending(_) == 0))
+    var done = 0
+    while (ready.nonEmpty) {
+      val j = ready.removeHead()
+      done += 1
+      next(j).foreach { i =>
+        round(i) = math.max(round(i), round(j) + 1)
+        pending(i) -= 1
+        if (pending(i) == 0) ready += i
+      }
+    }
+    if (done < n) None else Some(phases.map(p => round(id(p))))
   }
 
   /** Memoized q40 result per (session, dir): q41 reuses q40's strata
-    * instead of re-running the fixpoint. Dead-session entries are
+    * instead of re-stratifying. Dead-session entries are
     * purged on access (see [[graft.SessionCache]]). */
   private val strataCache =
     new graft.SessionCache[DataFrame](graft.Ckpt.free, "strata")
@@ -110,9 +143,9 @@ object Stratify {
         ($"l_partkey" === $"pk2" || $"l_suppkey" === $"sk2"))
       .select($"plan", $"phase", $"dep").distinct()
     // pinned: the memoized strata survive Bench/Verify's between-query
-    // block sweep (the loop's per-iteration checkpoints do not, and
-    // should not — they are garbage once the fixpoint converges)
-    graft.Ckpt.pinned(stratify(nodes, edges))
+    // block sweep; stratify's output is already cut, so pin that cut
+    // rather than checkpoint it a second time
+    graft.Ckpt.pin(stratify(nodes, edges))
   }
 
   val q40Sql: String =

@@ -186,6 +186,131 @@ class StratifySpec extends AnyFunSuite {
     }
   }
 
+  private def roundsOf(nodes: org.apache.spark.sql.DataFrame,
+      edges: org.apache.spark.sql.DataFrame): Seq[(Int, Int)] =
+    rounds.Stratify.stratify(nodes, edges).collect().toSeq
+      .map(r => r.getInt(1) -> r.getInt(2)).sorted
+
+  test("stratify throws on a 2-cycle and on a self-loop") {
+    val nodes = Seq(("p", 1), ("p", 2), ("p", 3)).toDF("plan", "phase")
+    for (es <- Seq(Seq(("p", 2, 1), ("p", 1, 2)), Seq(("p", 3, 1), ("p", 2, 2)))) {
+      val e = intercept[IllegalStateException] {
+        rounds.Stratify.stratify(nodes, es.toDF("plan", "phase", "dep"))
+      }
+      assert(e.getMessage.contains("did not converge"), es)
+      assert(rounds.Stratify.longestPathRounds(Seq(1, 2, 3),
+        es.map { case (_, ph, d) => (ph, d) }).isEmpty, es)
+    }
+  }
+
+  test("stratify ignores edges whose dep or phase is not a node") {
+    val nodes = Seq(("p", 1), ("p", 2), ("q", 1)).toDF("plan", "phase")
+    // 9 is no phase of p, 2 is no phase of q, and plan r has no nodes
+    val edges = Seq(("p", 2, 1), ("p", 2, 9), ("p", 9, 2), ("q", 2, 1), ("q", 1, 2),
+      ("r", 2, 1)).toDF("plan", "phase", "dep")
+    val out = rounds.Stratify.stratify(nodes, edges).collect()
+      .map(r => (r.getString(0), r.getInt(1)) -> r.getInt(2)).toMap
+    assert(out == Map(("p", 1) -> 1, ("p", 2) -> 2, ("q", 1) -> 1))
+    // a null endpoint names no node either, and adds no output row
+    val nullDeps = Seq(("p", Some(2), Some(1)), ("p", Some(1), None), ("p", None, Some(2)))
+      .toDF("plan", "phase", "dep")
+    assert(roundsOf(nodes.filter($"plan" === "p"), nullDeps) == Seq(1 -> 1, 2 -> 2))
+  }
+
+  test("stratify: duplicate node rows give duplicate output rows") {
+    val nodes = Seq(("p", 1), ("p", 2), ("p", 2), ("p", 3), ("p", 3), ("p", 3))
+      .toDF("plan", "phase")
+    val edges = Seq(("p", 2, 1), ("p", 3, 2)).toDF("plan", "phase", "dep")
+    assert(roundsOf(nodes, edges) == Seq(1 -> 1, 2 -> 2, 2 -> 2, 3 -> 3, 3 -> 3, 3 -> 3))
+  }
+
+  test("stratify: duplicate edges are harmless") {
+    val nodes = Seq(("p", 1), ("p", 2), ("p", 3)).toDF("plan", "phase")
+    val once = Seq(("p", 2, 1), ("p", 3, 1))
+    val twice = (once ++ once ++ Seq(("p", 3, 1))).toDF("plan", "phase", "dep")
+    assert(roundsOf(nodes, twice) == roundsOf(nodes, once.toDF("plan", "phase", "dep")))
+    assert(roundsOf(nodes, twice) == Seq(1 -> 1, 2 -> 2, 3 -> 2))
+  }
+
+  /** Property over many plans at once, with phase labels in random
+    * order (edges point from later to earlier in a random permutation,
+    * so no phase-number order helps): the keyed pass equals the pure
+    * per-plan function, and every round is 1 + max(dep rounds). The
+    * plan key keeps its type, bigint or string. */
+  test("stratify property: seeded multi-plan DAGs, bigint and string plan keys") {
+    val rnd = new scala.util.Random(7)
+    val plans = (1 to 24).map { p =>
+      val n = 1 + rnd.nextInt(9)
+      val order = rnd.shuffle((1 to 40).toVector).take(n)
+      val es = (0 until rnd.nextInt(3 * n)).flatMap { _ =>
+        val a = rnd.nextInt(n); val b = rnd.nextInt(n)
+        if (a == b) None else Some((order(a max b), order(a min b)))
+      }
+      (p.toLong * 1000003L, order, es)
+    }
+    val want = plans.map { case (p, order, es) =>
+      val rs = rounds.Stratify.longestPathRounds(order, es)
+        .getOrElse(fail(s"plan $p: generated a cycle"))
+      val got = order.zip(rs).toMap
+      order.foreach { ph =>
+        val deps = es.collect { case (`ph`, d) => got(d) }
+        assert(got(ph) == deps.maxOption.fold(1)(_ + 1), s"plan $p phase $ph")
+      }
+      p -> got
+    }.toMap
+    val nodeRows = plans.flatMap { case (p, order, _) => order.map((p, _)) }
+    val edgeRows = plans.flatMap { case (p, _, es) => es.map { case (ph, d) => (p, ph, d) } }
+    val asLong = rounds.Stratify.stratify(nodeRows.toDF("plan", "phase"),
+      edgeRows.toDF("plan", "phase", "dep"))
+    val asString = rounds.Stratify.stratify(
+      nodeRows.map { case (p, ph) => (s"plan-$p", ph) }.toDF("plan", "phase"),
+      edgeRows.map { case (p, ph, d) => (s"plan-$p", ph, d) }.toDF("plan", "phase", "dep"))
+    assert(asLong.schema("plan").dataType == org.apache.spark.sql.types.LongType)
+    assert(asString.schema("plan").dataType == org.apache.spark.sql.types.StringType)
+    val gotLong = asLong.collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getInt(2))
+    val gotString = asString.collect()
+      .map(r => (r.getString(0).stripPrefix("plan-").toLong, r.getInt(1)) -> r.getInt(2))
+    for (got <- Seq(gotLong, gotString)) {
+      assert(got.length == nodeRows.length)
+      assert(got.toMap == want.toSeq.flatMap { case (p, m) =>
+        m.map { case (ph, r) => (p, ph) -> r } }.toMap)
+    }
+  }
+
+  /** The pass must cost a FIXED number of Spark jobs whatever the DAG
+    * depth: a per-depth loop would launch jobs in proportion to it. */
+  test("stratify launches the same bounded job count for depth 2 and depth 12") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "stratify-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    def jobsFor(nodes: org.apache.spark.sql.DataFrame,
+        edges: org.apache.spark.sql.DataFrame): Int = {
+      org.apache.spark.sql.graftshim.GraftSqlShim.drainListenerBus(spark)
+      jobs.set(0)
+      sc.setJobGroup(group, "stratify job count")
+      try rounds.Stratify.stratify(nodes, edges)
+      finally sc.clearJobGroup()
+      org.apache.spark.sql.graftshim.GraftSqlShim.drainListenerBus(spark)
+      jobs.get()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val dag = jobsFor(Seq(("p", 1), ("p", 2), ("p", 3), ("p", 4)).toDF("plan", "phase"),
+        Seq(("p", 3, 1), ("p", 3, 2), ("p", 4, 2)).toDF("plan", "phase", "dep"))
+      val n = 12
+      val chain = jobsFor((1 to n).map(("p", _)).toDF("plan", "phase"),
+        (2 to n).map(i => ("p", i, i - 1)).toDF("plan", "phase", "dep"))
+      assert(dag >= 1 && dag <= 3, s"depth-2 DAG launched $dag jobs")
+      assert(chain == dag, s"depth-12 chain launched $chain jobs, depth-2 DAG $dag")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("q42 min/max-aggregation dependency sets equal the pair-join replay") {
     // The round-6 q42 rewrite replaced the (project, file) candidate
     // pair self-join with per-group min/max struct aggregations. The
