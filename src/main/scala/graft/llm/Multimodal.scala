@@ -1116,7 +1116,6 @@ object Multimodal {
     * candidate JOIN's left side is the NEW batch's chunks only —
     * work ∝ batch × band-collision mass, never store×store. */
   def q271VideoAlignIncrement(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val sigs = cachedVideoSigs(s, dir)
     def clipOf(c: org.apache.spark.sql.Column) = shiftright(c, FrameIdBits)
     alignIncrementFrom(

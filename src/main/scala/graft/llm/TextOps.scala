@@ -2086,12 +2086,8 @@ object TextOps {
     * Every census round then applies its whole batch as stacked fold
     * projections under ONE eager checkpoint and reads the per-stage
     * symbol totals in ONE aggregation — 3 flat-plan driver actions per
-    * census round. Since r19 a DELTA-maintained census is available
-    * for wide-vocabulary corpora (see [[bpeTrainIntBatched]] — the
-    * default here stays full-census because this corpus's 31-word
-    * table makes the full explode cheaper than delta's per-round
-    * join, measured in BpeCensusStudy). `mMax` bounds the
-    * stacked-fold plan depth (the 2^k analyzer lesson, PERF.md r17). */
+    * census round. `mMax` bounds the stacked-fold plan depth (the
+    * 2^k analyzer lesson, PERF.md r17). */
   def q264BpeTrain64(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     cachedBatched64(s, dir)
@@ -2124,42 +2120,10 @@ object TextOps {
     * id's occurrence count in the batch output, so every SEQUENTIAL
     * intermediate corpus total reconstructs from one aggregation.
     *
-    * CENSUS-DELTA maintenance (`deltaCensus` — VERDICT r18 item 5): a
-    * full re-census explodes EVERY adjacent pair of EVERY distinct
-    * word each round, but a round's merges only change the pair counts
-    * of words they actually rewrote. The census lives as a
-    * materialized (l, r, cnt) table; each round updates it from the
-    * CHANGED words only — (new pairs − old pairs)·wc, a full-outer
-    * merge on the 8-byte pair key — so per-round census cost is
-    * proportional to the batch's replacement FOOTPRINT plus the
-    * distinct-pair table, not the vocabulary. Exactness is inductive
-    * (round 1 is the full census; every delta is the exact multiset
-    * difference), pinned ≡ full-census and ≡ sequential in LlmSpec
-    * and asserted per run by BpeCensusStudy. Delta mode pays 4
-    * flat-plan driver actions per census round (top-T collect, fold
-    * checkpoint, totals aggregation, census checkpoint) vs full
-    * mode's 3.
-    *
-    * The default is MEASURED, not assumed — and the measurement is a
-    * NEGATIVE result worth keeping on the record (BpeCensusStudy,
-    * k=64): full census beats delta on the graded corpus (18.6 s vs
-    * 31.2 s at sf0.1, 17.9 vs 20.6 at 10× — its word table is a
-    * constant 31 rows, the anti-case) AND on a 200k-distinct-word
-    * wide-vocabulary corpus (29.4 s vs 53.2 s, 27 census rounds) where
-    * each merge rewrites ~1% of the vocabulary and delta "should" win.
-    * Why it doesn't, in this architecture: the census groupBy
-    * map-side-combines, so the full re-census's shuffle already
-    * carries only distinct pairs — the explode itself is ONE linear
-    * scan of the word table, comparable to the fold pass every round
-    * must pay anyway — while delta adds an eager checkpoint (holding
-    * BOTH symbol arrays), a changed-word scan, and a full-outer join,
-    * a fixed ~0.5–0.9 s/round that no tested vocabulary amortizes.
-    * The crossover needs the census scan alone to exceed that fixed
-    * cost — vocabularies of ~10^7+ distinct words on this box — so
-    * the knob stays available (pinned bit-identical here and in
-    * BpeCensusStudy's per-run assert) but OFF by default. */
+    * Every round re-censuses the whole word table. A delta-maintained
+    * census lost on every corpus measured (PERF.md r19). */
   private[graft] def bpeTrainIntBatched(docs: DataFrame, k: Int,
-      mMax: Int = 6, topT: Int = 256, deltaCensus: Boolean = false)
+      mMax: Int = 6, topT: Int = 256)
       : (Vector[(Int, Int, Long, String, String, String, Long)], Int) = {
     val s = docs.sparkSession
     import s.implicits._
@@ -2171,15 +2135,12 @@ object TextOps {
       .select($"w", transform(sequence(lit(1), length($"w")),
         i => ascii($"w".substr(i, lit(1)))).as("syms"), $"wc")
       .persist()
-    var back: DataFrame = words // the checkpointed frame backing `words`
-    var census: DataFrame = null // delta mode: materialized (l, r, cnt)
     var merges = Vector.empty[(Int, Int, Long, String, String, String, Long)]
     var rounds = 0
     def strOf(sym: Int): String =
       if (sym >= BpeSymBase) merges(sym - BpeSymBase - 1)._6
       else new String(Character.toChars(sym))
     def sqlStr(v: String): String = "'" + v.replace("'", "''") + "'"
-    var done = false
     try {
       while (merges.length < k) {
         rounds += 1
@@ -2189,18 +2150,12 @@ object TextOps {
         def trSql(x: String): String =
           if (merges.isEmpty) s"char($x)"
           else s"CASE $x $whens ELSE char($x) END"
-        lazy val pc = words
+        val top = words
           .select($"wc", explode(zip_with(
             slice($"syms", lit(1), size($"syms") - 1),
             slice($"syms", lit(2), size($"syms") - 1),
             (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
           .groupBy($"p.l", $"p.r").agg(sum($"wc").as("cnt"))
-        val censusNow =
-          if (deltaCensus) {
-            if (census == null) census = pc.transform(graft.Ckpt.cut)
-            census
-          } else pc
-        val top = censusNow
           .selectExpr("l", "r", "cnt", s"${trSql("l")} AS ls", s"${trSql("r")} AS rs")
           .orderBy($"cnt".desc, $"ls".asc, $"rs".asc).limit(topT).collect()
           .map(r => (r.getInt(0), r.getInt(1), r.getLong(2),
@@ -2269,49 +2224,20 @@ object TextOps {
               concat(slice(acc, lit(1), size(acc) - 1), array(lit(mid))))
               .otherwise(els)
           })
-        // the fold checkpoint carries BOTH the pre- and post-merge
-        // symbol arrays: the next word table reads syms2, and delta
-        // mode reads (syms, syms2) of the CHANGED words to update the
-        // census without re-exploding the whole corpus
-        val sel = words.select($"w", $"syms", folded.as("syms2"), $"wc")
+        val sel = words.select($"w", folded.as("syms"), $"wc")
           .transform(graft.Ckpt.cut)
         // one aggregation recovers every sequential intermediate:
         // rule j's replacement count is its minted id's occurrence
         // count (later batch rules never consume a minted id)
-        val aggs = sum($"wc" * size($"syms2")).as("total") +:
+        val aggs = sum($"wc" * size($"syms")).as("total") +:
           rules.map { case (_, _, mid) =>
-            sum($"wc" * size(filter($"syms2", x => x === lit(mid)))) }
+            sum($"wc" * size(filter($"syms", x => x === lit(mid)))) }
         val row0 = sel.agg(aggs.head, aggs.tail: _*).collect()(0)
         val totalAfterAll = row0.getLong(0)
         val repl = rules.indices.map(i => row0.getLong(i + 1))
-        if (deltaCensus) {
-          // merges only shrink arrays, so "changed" == "size shrank";
-          // each changed word retracts its old pairs and asserts its
-          // new ones at its own weight — the exact multiset difference
-          val changed = sel.filter(size($"syms2") < size($"syms"))
-          def signedPairs(cn: org.apache.spark.sql.Column,
-                          sign: org.apache.spark.sql.Column) =
-            transform(zip_with(
-              slice(cn, lit(1), size(cn) - 1), slice(cn, lit(2), size(cn) - 1),
-              (a, b) => struct(a.as("l"), b.as("r"))),
-              p => struct(p.getField("l").as("l"), p.getField("r").as("r"),
-                sign.as("d")))
-          val delta = changed.select(explode(concat(
-              signedPairs($"syms", -$"wc"), signedPairs($"syms2", $"wc"))).as("p"))
-            .groupBy($"p.l", $"p.r").agg(sum($"p.d").as("d"))
-            .filter($"d" =!= 0)
-          val upd = census.join(delta, Seq("l", "r"), "full_outer")
-            .select($"l", $"r",
-              (coalesce($"cnt", lit(0L)) + coalesce($"d", lit(0L))).as("cnt"))
-            .filter($"cnt" > 0)
-            .transform(graft.Ckpt.cut)
-          graft.Ckpt.free(census)
-          census = upd
-        }
-        graft.Ckpt.free(back)
-        back.unpersist()
-        back = sel
-        words = sel.select($"w", $"syms2".as("syms"), $"wc")
+        graft.Ckpt.free(words)
+        words.unpersist()
+        words = sel
         batch.zipWithIndex.foreach { case ((l, r, cnt, _, _), i) =>
           val mstr = strOf(l) + strOf(r)
           require(!merges.exists(_._6 == mstr),
@@ -2323,10 +2249,8 @@ object TextOps {
           merges :+= ((l, r, cnt, strOf(l), strOf(r), mstr, syms))
         }
       }
-      done = true
     } finally {
-      graft.Ckpt.free(back); back.unpersist()
-      if (census != null) graft.Ckpt.free(census)
+      graft.Ckpt.free(words); words.unpersist()
     }
     (merges, rounds)
   }

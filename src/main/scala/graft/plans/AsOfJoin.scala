@@ -583,7 +583,7 @@ object AsOf {
   def q183AsofNearest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.Column
-    import org.apache.spark.sql.functions.{coalesce, lit, unix_micros, when}
+    import org.apache.spark.sql.functions.{lit, unix_micros, when}
     val ev = graft.Tables.events(s, dir)
     val actions = ev.filter($"event_type" =!= "signup")
       .select($"event_id", $"user_id", $"ts")
@@ -669,7 +669,7 @@ object AsOf {
     * twice (>= and <=), its first-class operator against this one. */
   def q187LerpResample(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.functions.{coalesce, date_trunc, explode, expr, lit, max, min, round, sequence, unix_micros, when}
+    import org.apache.spark.sql.functions.{date_trunc, explode, expr, max, min, round, sequence, unix_micros, when}
     val base = graft.Tables.events(s, dir).filter($"user_id" < 20)
     val ev = base.groupBy($"user_id", $"ts").agg(max($"value").as("v"))
       .select($"user_id".as("eu"), $"ts".cast("timestamp").as("ets"), $"v")

@@ -18,17 +18,6 @@ import graft.model._
   */
 object QueueOps {
 
-  /** S1/S2 — queue scan + counts per project and mode
-    * (ref `scripts/starry-daemon.sh:90-115`). */
-  def queueCounts(plans: Dataset[Plan]): DataFrame = {
-    val s = plans.sparkSession
-    import s.implicits._
-    plans.filter($"status" === "queued")
-      .groupBy($"project", $"executionMode")
-      .agg(count(lit(1)).as("n_queued"))
-      .orderBy($"project", $"executionMode")
-  }
-
   /** S3 — active-existence predicate: is any plan active anywhere?
     * (global single-flight gate, ref `scripts/starry-daemon.sh:65-88`,
     * `182-185`). `limit(1)` keeps this a metadata-cheap probe. */
@@ -177,15 +166,6 @@ object QueueOps {
     val elig = eligible(plans, deps)
     val prio = withPriority(elig, deps, Timestamp.valueOf("2026-01-10 00:00:00"))
     pickNext(prio).select("id", "project", "planType", "priority")
-  }
-
-  /** Status overview + ETA on the fixture status table (S18/S19);
-    * driver-graded twin: [[Derived.q43StatusOverview]]. */
-  def fixtureStatusOverview(s: SparkSession): DataFrame = {
-    import s.implicits._
-    val st = Fixtures.statuses(s)
-    statusOverview(st).join(etaSeconds(st), Seq("plan_id"), "left")
-      .orderBy($"plan_id")
   }
 
   /** S21 — namespace FK resolution: board entries whose recorded

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
 import graft.model.PhaseStatus
 
 /** S17 — pulse freshness TTL (ref `commands/pulse.md:84-93`: a pulse

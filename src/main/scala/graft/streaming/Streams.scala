@@ -39,10 +39,6 @@ object Streams {
       .option("maxFilesPerTrigger", 1)
       .json(queueDir)
 
-  /** S2 streaming — rolling queue depth per project. */
-  def queueDepth(queue: DataFrame): DataFrame =
-    queue.groupBy(col("project")).count()
-
   /** Watermarked tumbling-window counts over an event stream (pulse
     * cadence S16; late data beyond the watermark is dropped, exactly
     * the completed-guard semantics of S13). */
@@ -157,11 +153,9 @@ object Streams {
   case class TransState(lastTu: Long, lastId: Long, lastType: String)
   case class Transition(src: String, dst: String)
 
-  /** The pure per-key transition fold, shared by the fMGWS form below
-    * and the transformWithState twin ([[TransitionsV2]]) — one
-    * transition function, two state APIs (the `Lifecycle.step`
-    * precedent). Returns (final state, emitted pairs). */
-  private[streaming] def foldTransitions(
+  /** The pure per-key transition fold behind [[transitionPairs]].
+    * Returns (final state, emitted pairs). */
+  private def foldTransitions(
       evs: Seq[TransEvent], init: Option[TransState],
       gapUs: Long): (Option[TransState], Seq[Transition]) = {
     var last = init
@@ -205,8 +199,7 @@ object Streams {
     * violations yield no output instead of wrong output (ADVICE r10).
     * StreamingSpec replays a two-batch feed and pins equality with the
     * batch q180 counts on identical data, plus the out-of-order drop.
-    * The fold itself lives in [[foldTransitions]], shared with the
-    * transformWithState twin ([[TransitionsV2]]). */
+    * The fold itself lives in [[foldTransitions]]. */
   def transitionPairs(events: Dataset[TransEvent],
       gapMinutes: Int = 30): Dataset[Transition] = {
     import events.sparkSession.implicits._
@@ -371,7 +364,6 @@ object Streams {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.llm.Multimodal.MediaRow],
                        _: Long) =>
         val s = batch.sparkSession
-        import s.implicits._
         val sigs = fingerprint(batch)
         val chunksOf = (df: org.apache.spark.sql.DataFrame) =>
           df.withColumn("cc", explode(array((0 until 4).map(c =>
