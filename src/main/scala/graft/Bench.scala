@@ -11,16 +11,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", s"${64L * 1024 * 1024}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.cores
+    val spark = Sessions.local(cpus)
     // Optional env: comma-separated name prefixes — bench only matching
     // queries (local iteration aid; the driver does not set it).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -114,15 +106,6 @@ object Bench {
     // consecutive reps is already covered by the warmup pass above.
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(3)
       .max(1)
-    // SPARK_GRAFT_BENCH_MODE=consecutive restores the pre-r12
-    // back-to-back rep order (all reps of a query together) — ONLY for
-    // calibration runs quantifying the interleaved mode's warmth cost
-    // (PERF.md r13): consecutive reps share codegen classes and
-    // shuffle-file page-cache locality between a query's samples, which
-    // interleaving trades away for contention immunity. A consecutive
-    // run is never canonical (see the stamp guard below).
-    val consecutive =
-      sys.env.get("SPARK_GRAFT_BENCH_MODE").contains("consecutive")
     // Process-wide stop-the-world time so far (ms across all collectors)
     // — deltas around each rep, summed per query, are that query's GC
     // bill (per-rep deltas survive the interleaving; a whole-window
@@ -262,14 +245,12 @@ object Bench {
     val gcBill = collection.mutable.Map.empty[String, Double].withDefaultValue(0.0)
     val failedSet = collection.mutable.Set.empty[String]
     val wall0 = System.nanoTime()
-    val schedule: Seq[(Int, (String, (SparkSession, String) => org.apache.spark.sql.DataFrame))] =
-      if (consecutive) for { q <- qs; pass <- 1 to reps } yield (pass, q)
-      else for { pass <- 1 to reps; q <- qs } yield (pass, q)
+    val schedule = for { pass <- 1 to reps; q <- qs } yield (pass, q)
     var lastPass = 1
     for ((pass, (name, fn)) <- schedule if !failedSet(name)) {
       // one probe pair at every interleaved pass boundary — box speed
       // sampled WHERE the catalog ran, for the gate's normalization
-      if (!consecutive && pass != lastPass) {
+      if (pass != lastPass) {
         midProbes += ((lastPass, probe(), probeMt()))
         lastPass = pass
       }
@@ -406,9 +387,8 @@ object Bench {
     // BENCH_full_r{N}_cpus{c}.json instead (kept for the scaling
     // analysis, never read as a round record — status.py's round glob
     // fullmatches the unsuffixed name).
-    val fullWidth = cpus.trim.toIntOption
-      .contains(Runtime.getRuntime.availableProcessors())
-    val canonical = only.isEmpty && !consecutive &&
+    val fullWidth = cpus == Runtime.getRuntime.availableProcessors()
+    val canonical = only.isEmpty &&
       sys.env.get("SPARK_GRAFT_BENCH_OUT").isEmpty &&
       sfDir == "/root/testdata/sf0.1"
     if (canonical) {
@@ -438,7 +418,7 @@ object Bench {
         } catch { case _: Throwable => false }
       val target =
         if (!fullWidth)
-          f"BENCH_full_r$round%02d_cpus${cpus.trim}.json"
+          f"BENCH_full_r$round%02d_cpus$cpus.json"
         else if (committedClean(stampName))
           f"BENCH_full_r$round%02d_driver.json"
         else stampName

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: prints the formatted physical plan for the named
   * queries (or a default set of the join/agg-heavy ones). Used to check
   * that broadcasts, pushdown and whole-stage codegen land as designed. */
@@ -11,14 +9,7 @@ object Explain {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q02_topk_revenue", "q03_join_brand", "q07_window_rank",
         "q20_range_join", "q21_asof_join", "q36_cosine_topk", "q40_round_strata")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cores)
     names.foreach { n =>
       println(s"\n================ $n ================")
       SparkEntry.queries.get(n) match {

@@ -178,13 +178,7 @@ object FixtureGen {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.drop(1).headOption.getOrElse("fixtures")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cores)
     datasets(spark, sfDir).foreach { case (name, df) =>
       df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       tidy(s"$outDir/$name")

@@ -1,41 +1,45 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.GraftSqlShim
+import graft.llm.DropMetrics
 
-/** Optimization-round measurement harness (guide §1/§7): runs the named
-  * queries through the same noop-sink methodology as Bench, with a
-  * stage-level listener in place of the (disabled) UI — per stage it
-  * prints wall time, task count, input/shuffle-read/shuffle-write bytes
-  * and records, so shuffle-bound vs compute-bound vs overhead-bound is
-  * readable per query without event-log spelunking.
+/** Measurement runner (PERF.md decade rows, optimization rounds): times
+  * the named queries on each given dataset dir and explains each time
+  * twice — by the `graft_*` observed metrics the run emitted and by its
+  * Spark stages.
   *
-  * Usage: sbt "runMain graft.Profile q242_probe_eval q238_quality_probe"
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
-  *      SPARK_GRAFT_PROFILE_REPS (default 2 — rep 1 warms JIT/codegen,
-  *      the LAST rep's stages are printed).
+  * Per (dir, query): a warm-up pass (file listing, codegen, JIT), then
+  * one timed pass, both through the same `noop` sink as [[Bench]] with
+  * `Ckpt.sweep` after each. It prints
+  *   - one `STUDY dir=… query=… sec=… graft_*=[…]` line carrying every
+  *     `graft_*` observation of the timed pass (DropMetrics' listener
+  *     and memo-build reports, values in schema order; a sum over empty
+  *     input shows as null). A width-capped run that looks sublinear is
+  *     only honest with its dropped-bucket/row/pair counters next to
+  *     the time;
+  *   - the timed pass's stages: wall time, task count, input /
+  *     shuffle-read / shuffle-write MB, so shuffle-bound vs
+  *     compute-bound vs overhead-bound is readable without the UI.
+  * A (dir, query) that throws prints STUDY-FAILED, and the run goes on.
+  *
+  * Usage: `runMain graft.Profile <dir1,dir2,...> <queryPrefix1,...>`
+  * (cores: [[Sessions.cores]]). Writes no bench record.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.get("SPARK_GRAFT_PROFILE_REPS").map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", s"${64L * 1024 * 1024}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length == 2,
+      "usage: Profile <dir1,dir2,...> <queryPrefix1,...>")
+    val dirs = args(0).split(",").toSeq.map(_.trim).filter(_.nonEmpty)
+    val prefixes = args(1).split(",").toSeq.map(_.trim).filter(_.nonEmpty)
+    val spark = Sessions.local(Sessions.cores)
+    DropMetrics.ensureListener(spark)
 
     final case class StageRow(jobId: Int, stageId: Int, name: String,
-      ms: Long, tasks: Int, inputMb: Double, srMb: Double, swMb: Double,
-      outRecords: Long)
+      ms: Long, tasks: Int, inputMb: Double, srMb: Double, swMb: Double)
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageRow]()
     val jobOfStage = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-    val listener = new SparkListener {
+    spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
         js.stageIds.foreach(sid => jobOfStage.put(sid, js.jobId))
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
@@ -47,36 +51,54 @@ object Profile {
           si.name.takeWhile(_ != '\n'), ms, si.numTasks,
           m.inputMetrics.bytesRead / 1e6,
           m.shuffleReadMetrics.remoteBytesRead / 1e6 + m.shuffleReadMetrics.localBytesRead / 1e6,
-          m.shuffleWriteMetrics.bytesWritten / 1e6,
-          m.outputMetrics.recordsWritten))
+          m.shuffleWriteMetrics.bytesWritten / 1e6))
       }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    })
 
-    val names = if (args.nonEmpty) args.toSeq else Seq("q02_topk_revenue")
-    names.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case None => println(s"unknown query $name")
-        case Some(fn) =>
-          var lastDt = 0.0
-          for (r <- 1 to reps) {
-            stages.clear()
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            lastDt = (System.nanoTime() - t0) / 1e9
-            Ckpt.sweep(spark)
-            println(f"== $name rep $r: $lastDt%.3f s")
-          }
+    val qs = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => prefixes.exists(n.startsWith) }
+    require(qs.nonEmpty, s"no query matches ${prefixes.mkString(",")}")
+    // a (dir, query) that throws must not abort the rest of the run — a
+    // multi-dir study losing all later points to one bad decade; the
+    // session stop rides a finally so an unexpected error cannot leak
+    // the JVM's executors
+    try {
+      for (dir <- dirs; (name, fn) <- qs) {
+        def pass(): Double = {
+          val t0 = System.nanoTime()
+          fn(spark, dir).write.format("noop").mode("overwrite").save()
+          val dt = (System.nanoTime() - t0) / 1e9
+          Ckpt.sweep(spark)
+          dt
+        }
+        try {
+          pass()
+          // listener callbacks fire asynchronously: drain before clearing
+          // so a slow warm-up callback cannot bleed into the timed pass's
+          // metrics and stages, and drain again before reading them
+          GraftSqlShim.drainListenerBus(spark)
+          DropMetrics.lastReports.clear()
+          stages.clear()
+          val dt = pass()
+          GraftSqlShim.drainListenerBus(spark)
+          val kv = DropMetrics.lastReports.toSeq.sortBy(_._1)
+            .map { case (k, vs) => vs.values.mkString(s"$k=[", ",", "]") }.mkString(" ")
+          println(f"STUDY dir=$dir query=$name sec=$dt%.2f $kv")
           import scala.jdk.CollectionConverters._
           val rows = stages.asScala.toVector.sortBy(s => (s.jobId, s.stageId))
           val nJobs = rows.map(_.jobId).distinct.size
-          println(f"-- $name last-rep stages=${rows.size} jobs=$nJobs sumStageMs=${rows.map(_.ms).sum}")
+          println(f"-- $name stages=${rows.size} jobs=$nJobs sumStageMs=${rows.map(_.ms).sum}")
           rows.foreach { s =>
             println(f"   job=${s.jobId}%3d stage=${s.stageId}%4d ${s.ms}%6d ms tasks=${s.tasks}%3d " +
               f"in=${s.inputMb}%7.2fMB sr=${s.srMb}%7.2fMB sw=${s.swMb}%7.2fMB ${s.name}")
           }
+        } catch {
+          case t: Throwable =>
+            System.err.println(
+              s"STUDY-FAILED dir=$dir query=$name: ${t.getClass.getName}: ${t.getMessage}")
+            t.getStackTrace.take(5).foreach(f => System.err.println(s"  at $f"))
+        }
       }
-    }
-    spark.stop()
+    } finally spark.stop()
   }
 }

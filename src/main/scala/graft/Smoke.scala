@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke tool: prints table schemas and runs every declared query
   * on a small sf dir. Not part of the driver contract. */
 object Smoke {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cores)
     Tables.all.foreach { n =>
       val df = if (n == "events") Tables.events(spark, dir) else Tables.t(spark, dir, n)
       println(s"== $n: ${df.schema.simpleString}")

@@ -19,9 +19,9 @@ import graft.Tables
   * Scale: candidate generation is an equality join on (band, bucket) —
   * shuffle-partitioned, no cross product. Bucket skew (boilerplate
   * shingles) is the known hazard at 100 TB; counters, BOTH implemented:
-  * cap bucket width (default — drop + count, `MaxBucketWidth`) or salt
-  * hot buckets (`spark.graft.lsh.saltHotBuckets=true` — lossless
-  * triangle decomposition, [[saltedPairs]]), plus AQE skew-join locally.
+  * cap bucket width ([[lshCandidates]] — drop + count, `MaxBucketWidth`)
+  * or salt hot buckets ([[saltedPairs]] — lossless triangle
+  * decomposition), plus AQE skew-join locally.
   * Verification touches only candidate pairs, O(candidates), and the
   * signature pass is one narrow scan.
   */
@@ -142,15 +142,14 @@ object Dedup {
     * ride the ×Bands-exploded shuffle (at corpus scale that re-shuffles
     * the whole corpus 8× in array form). Width-1 buckets are dropped
     * before the self-join (they cannot pair), width->maxWidth buckets
-    * by the skew cap above — unless `spark.graft.lsh.saltHotBuckets`
-    * is true, in which case hot buckets are SALTED instead of dropped:
-    * see [[saltedPairs]]. */
+    * by the skew cap above, and counted (DropMetrics.LshDrops). The
+    * lossless alternative that SALTS hot buckets instead of dropping
+    * them is [[saltedPairs]]. */
   def lshCandidates(sigs: DataFrame, maxWidth: Int = MaxBucketWidth): DataFrame = {
-    // Non-positive widths have no sane reading on EITHER policy path:
-    // the capped filter (w <= maxWidth) would silently emit an EMPTY
-    // candidate set (everything counted as dropped), and the salted
-    // path would detonate (see saltedPairs). Fail fast at plan-build
-    // time; "cap disabled" is spelled maxWidth = Int.MaxValue.
+    // A non-positive width has no sane reading: the capped filter
+    // (w <= maxWidth) would silently emit an EMPTY candidate set
+    // (everything counted as dropped). Fail fast at plan-build time;
+    // "cap disabled" is spelled maxWidth = Int.MaxValue.
     require(maxWidth > 0, s"lshCandidates: maxWidth must be positive, got $maxWidth")
     val s = sigs.sparkSession
     import s.implicits._
@@ -160,9 +159,6 @@ object Dedup {
     // still collapse to one shuffle via ReusedExchange. Bench/Verify
     // sweep the blocks after each query (graft.Ckpt).
     val banded = xxhBanded(sigs).persist()
-    val saltHot = s.conf.getOption("spark.graft.lsh.saltHotBuckets")
-      .exists(_.trim.toBoolean)
-    if (saltHot) return saltedPairs(banded, maxWidth)
     // pre-filter widths carry the drop observability (DropMetrics):
     // what the skew cap removes is counted on the same pass that
     // computes the widths — no extra job, and the q87 pipeline logs it
@@ -186,9 +182,9 @@ object Dedup {
   }
 
   /** SALT-hot-buckets candidate generation — the lossless 100 TB
-    * counter to the width cap (the alternative the module scaladoc has
-    * flagged since round 4, now implemented behind
-    * `spark.graft.lsh.saltHotBuckets=true`). A bucket of width w is
+    * counter to the width cap of [[lshCandidates]] (the alternative the
+    * module scaladoc has flagged since round 4; q214, q228, q255 and
+    * q260 call it directly). A bucket of width w is
     * split into g = ⌈w / maxWidth⌉ deterministic salt groups
     * (xxhash64(doc_id) mod g) and its pair set is TRIANGLE-DECOMPOSED:
     * a row in group p joins under cell keys (p, p..g−1) on the left
@@ -209,11 +205,8 @@ object Dedup {
     * pair set, skew-free. */
   private[graft] def saltedPairs(banded: DataFrame, maxWidth: Int): DataFrame = {
     // maxWidth <= 0 would make ng = ceil(w / 0.0) = Infinity -> an
-    // Int.MaxValue-group sequence explode per row. lshCandidates
-    // already rejects non-positive widths for both policy paths (its
-    // capped filter would silently return EMPTY, not "cap disabled");
-    // this local require keeps direct callers of the salted kernel —
-    // e.g. the graded q214/q228 routes — equally fail-fast.
+    // Int.MaxValue-group sequence explode per row; fail fast at
+    // plan-build time, as lshCandidates does for the capped path.
     require(maxWidth > 0, s"saltedPairs: maxWidth must be positive, got $maxWidth")
     val s = banded.sparkSession
     import s.implicits._
@@ -1339,7 +1332,7 @@ object Dedup {
     * of `dir` (VERDICT r16 item 3: q252 is deliberately uncapped and
     * q255's flood corpus is fixed-size, so the composite a 100 TB run
     * executes had no measured curve on a corpus that GROWS with the
-    * scale factor; this registration is what ScalingStudy times at
+    * scale factor; this registration is what graft.Profile times at
     * 1×/10×/100× — the decade row lives in PERF.md §q260). Same
     * maxWidth=4 salting as q255 so hot buckets genuinely decompose at
     * every scale. The oracle replays the UNCAPPED banding + verify +

@@ -1,6 +1,7 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -70,31 +71,47 @@ object DropMetrics {
         // built-in collection can return empty under AQE wrapper
         // nesting (seen at the 100x scaling point), and a cap monitor
         // that vanishes exactly at scale is worse than none
-        private def report(qe: QueryExecution): Unit =
-          org.apache.spark.sql.graftshim.GraftSqlShim
-            .collectObservedMetrics(qe.executedPlan)
-            .foreach { case (name, row) =>
-            if (name.startsWith("graft_")) {
-              // same test-hook trace as reportNow: streaming foreachBatch
-              // actions reach metrics ONLY through this listener (the
-              // write's QueryExecution is not the caller's), so the
-              // ingest-cap pins read lastReports after draining the bus
-              lastReports(name) = row.schema.fieldNames.zip(row.toSeq).collect {
-                case (k, v: Long) => k -> v
-                case (k, v: Int)  => k -> v.toLong
-              }.toMap
-              val kv = row.schema.fieldNames.zip(row.toSeq)
-                .map { case (k, v) => s"$k=$v" }.mkString(", ")
-              log.info(s"$name: $kv")
-            }
-          }
         override def onSuccess(funcName: String, qe: QueryExecution,
-                               durationNs: Long): Unit = report(qe)
+                               durationNs: Long): Unit =
+          record(qe.executedPlan).foreach { case (name, vs) =>
+            log.info(s"$name: ${show(vs)}")
+          }
         override def onFailure(funcName: String, qe: QueryExecution,
                                exception: Exception): Unit = ()
       })
     }
   }
+
+  /** Last values the listener or reportNow saw per metric name. The
+    * memoized consumers' plans no longer carry the observe node, so "the
+    * build reported its counters" is only assertable if the report
+    * leaves a readable trace (RelationalSpec drives q155 through the
+    * memo build and reads this); streaming foreachBatch actions reach
+    * metrics ONLY through the listener (the write's QueryExecution is
+    * not the caller's), so the ingest-cap pins read it after draining
+    * the bus, and `graft.Profile` prints it per timed pass. Not a
+    * metrics store: production consumers read the log lines. */
+  private[graft] val lastReports =
+    scala.collection.concurrent.TrieMap.empty[String, Map[String, java.lang.Long]]
+
+  /** One observed-metrics row as field → value, in schema order. Every
+    * graft_* observation is a Long sum or count; a sum over empty input
+    * is null and stays in the map as null, so a report still names it. */
+  private def values(row: Row): ListMap[String, java.lang.Long] =
+    ListMap.from(row.schema.fieldNames.zip(row.toSeq.map(_.asInstanceOf[java.lang.Long])))
+
+  private def show(vs: Map[String, java.lang.Long]): String =
+    vs.map { case (k, v) => s"$k=$v" }.mkString(", ")
+
+  /** Every graft_* observation of `plan`, stored in [[lastReports]]. */
+  private def record(plan: org.apache.spark.sql.execution.SparkPlan)
+      : Map[String, ListMap[String, java.lang.Long]] =
+    org.apache.spark.sql.graftshim.GraftSqlShim.collectObservedMetrics(plan)
+      .collect { case (name, row) if name.startsWith("graft_") =>
+        val vs = values(row)
+        lastReports(name) = vs
+        name -> vs
+      }
 
   /** Log every graft_* observed metric of `df`'s LAST execution NOW.
     * For intermediates materialized through a checkpoint action inside
@@ -107,49 +124,25 @@ object DropMetrics {
     * accumulators live on the df's own executedPlan, so they are
     * readable here after the checkpoint job ran (pinned in
     * RelationalSpec via the memo-build path). */
-  /** Last values reportNow saw per metric name — a test hook (ADVICE
-    * r13: the memoized consumers' plans no longer carry the observe
-    * node, so "the build reported its counters" is only assertable if
-    * the report leaves a readable trace; RelationalSpec drives q155
-    * through the memo build and reads this). Not a metrics store:
-    * production consumers read the log lines. */
-  private[graft] val lastReports =
-    scala.collection.concurrent.TrieMap.empty[String, Map[String, Long]]
-
   def reportNow(df: DataFrame): Unit =
-    org.apache.spark.sql.graftshim.GraftSqlShim
-      .collectObservedMetrics(df.queryExecution.executedPlan)
-      .foreach { case (name, row) =>
-        if (name.startsWith("graft_")) {
-          lastReports(name) = row.schema.fieldNames.zip(row.toSeq).collect {
-            case (k, v: Long) => k -> v
-            case (k, v: Int)  => k -> v.toLong
-          }.toMap
-          val kv = row.schema.fieldNames.zip(row.toSeq)
-            .map { case (k, v) => s"$k=$v" }.mkString(", ")
-          // WARN when anything was actually dropped: every runner sets
-          // log level WARN, so an INFO-only report would make the cap
-          // silent exactly when it binds (ScalingStudy's timed pass
-          // reads the memoized blocks and never re-executes the observe)
-          val dropped = row.toSeq.exists {
-            case l: Long => l != 0L; case i: Int => i != 0; case _ => false
-          }
-          if (dropped) log.warn(s"$name (memo build): $kv")
-          else log.info(s"$name (memo build): $kv")
-        }
-      }
+    record(df.queryExecution.executedPlan).foreach { case (name, vs) =>
+      // WARN when anything was actually dropped: every runner sets log
+      // level WARN, so an INFO-only report would make the cap silent
+      // exactly when it binds (graft.Profile's timed pass reads the
+      // memoized blocks and never re-executes the observe)
+      if (vs.values.exists(v => v != null && v != 0L))
+        log.warn(s"$name (memo build): ${show(vs)}")
+      else log.info(s"$name (memo build): ${show(vs)}")
+    }
 
   /** The named observation's values from a COMPLETED query (null-safe:
-    * empty map when the action hasn't run or the name is absent).
-    * Same exhaustive walk as the listener — see ensureListener. */
+    * empty map when the action hasn't run or the name is absent; a
+    * null field is left out). Same exhaustive walk as the listener —
+    * see ensureListener. */
   def read(df: DataFrame, name: String): Map[String, Long] =
     org.apache.spark.sql.graftshim.GraftSqlShim
-      .collectObservedMetrics(df.queryExecution.executedPlan).get(name) match {
-      case Some(row) =>
-        row.schema.fieldNames.zip(row.toSeq).collect {
-          case (k, v: Long) => k -> v
-          case (k, v: Int)  => k -> v.toLong
-        }.toMap
-      case None => Map.empty
-    }
+      .collectObservedMetrics(df.queryExecution.executedPlan).get(name)
+      .fold(Map.empty[String, Long])(values(_).collect {
+        case (k, v) if v != null => k -> v.longValue
+      })
 }

@@ -146,11 +146,8 @@ class DedupSpec extends AnyFunSuite {
 
     val uncapped = Dedup.lshCandidates(sigs, maxWidth = Int.MaxValue).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.lsh.saltHotBuckets", "true")
-    val salted =
-      try Dedup.lshCandidates(sigs, maxWidth = 8).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      finally spark.conf.unset("spark.graft.lsh.saltHotBuckets")
+    val salted = Dedup.saltedPairs(Dedup.xxhBanded(sigs), 8).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(salted == uncapped,
       s"salted minus uncapped: ${(salted -- uncapped).take(5)}; " +
         s"uncapped minus salted: ${(uncapped -- salted).take(5)}")
@@ -176,13 +173,10 @@ class DedupSpec extends AnyFunSuite {
     // ceil(w / 0.0) = Infinity -> Int.MaxValue salt groups -> a
     // per-row sequence explode; the guard must fire at plan-build time
     val sigs = Seq((1L, Seq(1L, 2L))).toDF("doc_id", "sig")
-    spark.conf.set("spark.graft.lsh.saltHotBuckets", "true")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Dedup.lshCandidates(sigs, maxWidth = 0)
-      }
-      assert(e.getMessage.contains("must be positive"))
-    } finally spark.conf.unset("spark.graft.lsh.saltHotBuckets")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.saltedPairs(Dedup.xxhBanded(sigs), 0)
+    }
+    assert(e.getMessage.contains("must be positive"))
   }
 
   test("capped path refuses a non-positive width instead of returning empty") {

@@ -4,16 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // a literal 4, not Sessions.cores: job counts and partitioning in the
+  // specs must not depend on the box
+  lazy val spark: SparkSession = Sessions.local(4)
   val sf: String = "/root/testdata/sf0.001"
 }
 

@@ -192,6 +192,7 @@ class ScaleSpec extends AnyFunSuite {
       .sortBy("o_orderkey").option("path", s"$wh/ob").saveAsTable("orders_b")
     l.write.mode("overwrite").bucketBy(8, "l_orderkey")
       .sortBy("l_orderkey").option("path", s"$wh/lb").saveAsTable("lineitem_b")
+    val savedBroadcast = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
     try {
       // disable auto-broadcast so the join would otherwise shuffle
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -212,7 +213,10 @@ class ScaleSpec extends AnyFunSuite {
       val got = j.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(got == expected)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", s"${10L * 1024 * 1024}")
+      savedBroadcast match {
+        case Some(v) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
+        case None    => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      }
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS lineitem_b")
     }
